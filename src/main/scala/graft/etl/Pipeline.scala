@@ -99,12 +99,40 @@ object Pipeline {
     * write for a key replaces earlier ones; keyless rows all append,
     * R19). Orders by (ingestion_timestamp, page) — the reference's
     * arrival order within a run. */
-  def lastWins(df: DataFrame, key: String, orderCols: Seq[Column]): DataFrame = {
-    val w = Window.partitionBy(col(key)).orderBy(orderCols.map(_.desc): _*)
-    val keyed = df.filter(col(key).isNotNull)
-      .withColumn("__rn", row_number().over(w))
+  def lastWins(df: DataFrame, key: String, orderCols: Seq[Column]): DataFrame =
+    keepFirst(df.filter(col(key).isNotNull), Seq(col(key)), orderCols)
+      .unionByName(df.filter(col(key).isNull))
+
+  /** The top row of each `partitionCols` group by `orderCols` descending. */
+  private def keepFirst(df: DataFrame, partitionCols: Seq[Column],
+                        orderCols: Seq[Column]): DataFrame = {
+    val w = Window.partitionBy(partitionCols: _*).orderBy(orderCols.map(_.desc): _*)
+    df.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
-    keyed.unionByName(df.filter(col(key).isNull))
+  }
+
+  /** The snapshot merge both upserts share: one row per key over
+    * `existing ∪ batch`. Batch rows beat stored ones; within the batch
+    * the later arrival wins — (ingestion ts, page, item), the
+    * reference's page-then-item loop (without the item, two same-key
+    * docs in one page tie and the survivor depends on shuffle order).
+    * One window ordered by (generation, arrival…) picks the survivor a
+    * batch-level dedup followed by the merge would. Keyless rows pass
+    * through (R19). `clusterBy` names a function of the key (the
+    * bucket) for the one shuffle to hash instead: the survivors are the
+    * same, and a write partitioned by it gets one task, hence one file,
+    * per value. */
+  private def mergeLastWins(existing: Option[DataFrame], batch: DataFrame, key: String,
+                            clusterBy: Option[String] = None): DataFrame = {
+    val arrival = col("ingestion_timestamp") +:
+      Seq("source_page", "source_item").filter(batch.columns.contains(_)).map(col)
+    val stamped = batch.withColumn("__gen", lit(1))
+    val all = existing.fold(stamped)(_.withColumn("__gen", lit(0)).unionByName(stamped))
+    val order = col("__gen") +: arrival
+    (clusterBy match {
+      case Some(c) => keepFirst(all.repartition(col(c)), Seq(col(c), col(key)), order)
+      case None => lastWins(all, key, order)
+    }).drop("__gen")
   }
 
   /** Load (R17–R19, etl_connector.py:167-191): key-based upsert into a
@@ -122,26 +150,16 @@ object Pipeline {
   def upsert(spark: SparkSession, batch: DataFrame, snapshotDir: String,
              key: String = "pulse_id", maxRecordsPerFile: Int = 0): Unit = {
     val fs = new java.io.File(snapshotDir)
-    // within a batch, arrival order = (ingestion ts, page, item) — the
-    // reference's sequential page-then-item loop; without the item
-    // index, two same-key docs in ONE page tie on (ts, page) and the
-    // survivor depends on shuffle order
-    val arrival: Seq[Column] =
-      Seq(col("ingestion_timestamp")) ++
-        (if (batch.columns.contains("source_page")) Seq(col("source_page")) else Nil) ++
-        (if (batch.columns.contains("source_item")) Seq(col("source_item")) else Nil)
-    val batchDeduped = lastWins(batch.withColumn("__gen", lit(1)), key, arrival)
-    val merged =
-      if (fs.exists() && fs.listFiles() != null && fs.listFiles().nonEmpty) {
-        val existing = spark.read.parquet(snapshotDir).withColumn("__gen", lit(0))
-        // batch rows (gen=1) beat snapshot rows (gen=0) per key
-        lastWins(existing.unionByName(batchDeduped), key, col("__gen") +: arrival)
-      } else batchDeduped
+    val existing =
+      if (fs.exists() && fs.listFiles() != null && fs.listFiles().nonEmpty)
+        Some(spark.read.parquet(snapshotDir))
+      else None
+    val merged = mergeLastWins(existing, batch, key)
     val tmp = snapshotDir + ".tmp-" + java.util.UUID.randomUUID().toString
     // R17's sink batch size, Spark-shaped: the reference flushes every
     // `batchSize` docs per bulk write (etl_connector.py:206,229); the
     // parquet analog bounds rows per output file.
-    val writer = merged.drop("__gen").write.mode("overwrite")
+    val writer = merged.write.mode("overwrite")
     (if (maxRecordsPerFile > 0)
        writer.option("maxRecordsPerFile", maxRecordsPerFile.toLong)
      else writer).parquet(tmp)
@@ -215,17 +233,29 @@ object Pipeline {
     * [[readIncrementalSnapshot]] (plain parquet read + drop the
     * layout column).
     *
+    * Cost per batch: the batch is routed once (bucket -1 for a null
+    * key) and persisted; one job collects its distinct buckets, which
+    * plans both the keyless append and the touched keyed buckets. The
+    * merge is then one shuffle of the touched buckets' stored rows and
+    * the batch, clustered on `bucket`, with one window over it (the
+    * same merge [[upsert]] runs): each touched bucket is merged and
+    * written by one task, so it holds one parquet file (more only
+    * under `maxRecordsPerFile`).
+    *
     * The per-bucket swap is checked-rename, like [[upsert]]: a crash
     * mid-swap can leave SOME buckets on the new batch and others on
     * the old — the documented gap a transactional format
     * (Delta/Iceberg MERGE) closes; this is the no-dependency fallback
     * with the same directory-granular write pattern those formats use
-    * underneath. */
+    * underneath. A crash between a bucket's two renames leaves its
+    * live rows in `.old-<p>-*`; the next call fails fast on that
+    * marker rather than merging the batch into an empty bucket. */
   def upsertIncremental(spark: SparkSession, batch: DataFrame, snapshotDir: String,
                         key: String = "pulse_id", numBuckets: Int = 32,
                         maxRecordsPerFile: Int = 0): Unit = {
     require(numBuckets >= 1, s"numBuckets ($numBuckets) must be >= 1")
     val root = new java.io.File(snapshotDir)
+    requireNoSwapLeftovers(root, "upsertIncremental")
     root.mkdirs()
     val manifest = readManifest(snapshotDir) match {
       case Some(m) =>
@@ -241,45 +271,38 @@ object Pipeline {
         val m = SnapshotManifest(numBuckets, key)
         writeManifest(snapshotDir, m); m
     }
-    val arrival: Seq[Column] =
-      Seq(col("ingestion_timestamp")) ++
-        (if (batch.columns.contains("source_page")) Seq(col("source_page")) else Nil) ++
-        (if (batch.columns.contains("source_item")) Seq(col("source_item")) else Nil)
-    val deduped = lastWins(batch.withColumn("__gen", lit(1)), key, arrival)
-
-    // keyless rows (R19): append-only — new immutable files into the
-    // reserved bucket, no read-modify-write of anything
-    val keyless = deduped.filter(col(key).isNull).drop("__gen")
-    if (!keyless.isEmpty)
-      keyless.write.mode("append").parquet(s"$snapshotDir/bucket=-1")
-
-    // persisted: the touched-bucket collect and the merge write are two
-    // jobs, and both MUST see the same batch rows — an unpersisted
-    // nondeterministic batch (e.g. rand-derived keys) could route rows
-    // to buckets the first job never saw
-    val keyed = deduped.filter(col(key).isNotNull)
-      .withColumn("bucket",
-        pmod(xxhash64(col(key)), lit(manifest.numBuckets.toLong)).cast("int"))
+    // persisted: the bucket plan, the keyless append and the merge
+    // write are separate jobs, and all MUST see the same batch rows —
+    // an unpersisted nondeterministic batch (e.g. rand-derived keys)
+    // could route rows to buckets the plan never saw
+    val routed = batch
+      .withColumn("bucket", when(col(key).isNull, lit(-1)).otherwise(
+        pmod(xxhash64(col(key)), lit(manifest.numBuckets.toLong)).cast("int")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // the touched-bucket list is O(numBuckets) scalars on the driver —
-      // the same cardinality a table format's file-pruning pass collects
-      val touched = keyed.select("bucket").distinct()
+      // the bucket list is O(numBuckets) scalars on the driver — the
+      // same cardinality a table format's file-pruning pass collects
+      val buckets = routed.select("bucket").distinct()
         .collect().map(_.getInt(0)).sorted
+      // keyless rows (R19): append-only — new immutable files into the
+      // reserved bucket, no read-modify-write of anything
+      if (buckets.contains(-1))
+        routed.filter(col("bucket") === -1).drop("bucket")
+          .write.mode("append").parquet(s"$snapshotDir/bucket=-1")
+      val touched = buckets.filter(_ >= 0)
       if (touched.isEmpty) return
       val existingDirs = touched.map(p => new java.io.File(root, s"bucket=$p"))
         .filter(d => d.exists() && Option(d.listFiles()).exists(_.nonEmpty))
         .map(_.getAbsolutePath)
-      val merged =
-        if (existingDirs.nonEmpty) {
-          // basePath keeps the bucket partition column on the selective read
-          val existing = spark.read.option("basePath", snapshotDir)
-            .parquet(existingDirs.toIndexedSeq: _*)
-            .withColumn("__gen", lit(0))
-          lastWins(existing.unionByName(keyed), key, col("__gen") +: arrival)
-        } else keyed
+      // basePath keeps the bucket partition column on the selective read
+      val existing =
+        if (existingDirs.isEmpty) None
+        else Some(spark.read.option("basePath", snapshotDir)
+          .parquet(existingDirs.toIndexedSeq: _*))
+      val merged = mergeLastWins(existing, routed.filter(col("bucket") >= 0), key,
+        clusterBy = Some("bucket"))
       val tmp = snapshotDir + ".tmp-" + java.util.UUID.randomUUID().toString
-      val writer = merged.drop("__gen").write.mode("overwrite").partitionBy("bucket")
+      val writer = merged.write.mode("overwrite").partitionBy("bucket")
       (if (maxRecordsPerFile > 0)
          writer.option("maxRecordsPerFile", maxRecordsPerFile.toLong)
        else writer).parquet(tmp)
@@ -322,7 +345,7 @@ object Pipeline {
         deleteRecursively(old)
       }
       deleteRecursively(new java.io.File(tmp))
-    } finally { keyed.unpersist(); () }
+    } finally { routed.unpersist(); () }
   }
 
   /** Read back a snapshot written by [[upsertIncremental]]: standard
@@ -330,6 +353,21 @@ object Pipeline {
     * dropped — same schema the full-rewrite [[upsert]] snapshot has. */
   def readIncrementalSnapshot(spark: SparkSession, snapshotDir: String): DataFrame =
     spark.read.parquet(snapshotDir).drop("bucket")
+
+  /** Fail fast on leftovers from an interrupted bucket swap: a bucket
+    * whose live rows sit in `.old-<p>-*` reads as absent (dot-directories
+    * are skipped), so writing over that layout would silently drop or
+    * resurrect rows. Recovery is one rename/delete away; both writers
+    * are idempotent after it. */
+  private def requireNoSwapLeftovers(root: java.io.File, op: String): Unit = {
+    val stray = Option(root.listFiles()).getOrElse(Array.empty[java.io.File])
+      .filter(f => f.getName.startsWith(".old-") || f.getName.startsWith(".new-"))
+    require(stray.isEmpty,
+      s"$op: $root holds leftover swap markers " +
+        s"[${stray.map(_.getName).mkString(", ")}] from an interrupted run — " +
+        "recover first (restore .old-<p> if bucket=<p> is absent, else delete " +
+        "the leftovers), then re-run")
+  }
 
   /** Subject-deletion EXECUTION over an incremental snapshot — the
     * audit-then-act completion of
@@ -383,16 +421,7 @@ object Pipeline {
       s"$snapshotDir has no manifest — purgeApply operates only on " +
         "upsertIncremental snapshots (the bucket layout IS the pruning index)"))
     val root = new java.io.File(snapshotDir)
-    // fail fast on leftovers from an interrupted swap: purging over an
-    // ambiguous layout could double-delete or resurrect rows — the
-    // scaladoc's recovery steps are one rename/delete away
-    val stray = Option(root.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(f => f.getName.startsWith(".old-") || f.getName.startsWith(".new-"))
-    require(stray.isEmpty,
-      s"purgeApply: $snapshotDir holds leftover swap markers " +
-        s"[${stray.map(_.getName).mkString(", ")}] from an interrupted run — " +
-        "recover first (restore .old-<p> if bucket=<p> is absent, else delete " +
-        "the leftovers), then re-run; the purge is idempotent after recovery")
+    requireNoSwapLeftovers(root, "purgeApply")
     val keyType = spark.read.parquet(snapshotDir).schema(manifest.key).dataType
     // persisted: the bucket plan and the anti-join must see the SAME id
     // set (the upsertIncremental nondeterminism discipline)

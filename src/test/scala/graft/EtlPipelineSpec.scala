@@ -13,6 +13,29 @@ class EtlPipelineSpec extends SparkSpec {
   private val fixtures = getClass.getResource("/pages").getPath
   private val cfg = EtlConfig(apiKey = "test-key", city = Some("Berlin"))
 
+  /** path -> (size, md5) of every file under `root` (the `.parquet`
+    * ones by default) — byte-identity fingerprints for the snapshot
+    * layout tests. */
+  private def fingerprint(root: String, keep: String => Boolean = _.endsWith(".parquet"))
+      : Map[String, (Long, String)] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
+      else Seq(f)
+    walk(new java.io.File(root)).filter(f => keep(f.getName)).map { f =>
+      val md5 = java.security.MessageDigest.getInstance("MD5")
+        .digest(Files.readAllBytes(f.toPath)).map("%02x".format(_)).mkString
+      f.getAbsolutePath -> (f.length(), md5)
+    }.toMap
+  }
+
+  /** bucket directory name -> number of parquet files in it, keyed
+    * buckets only (`bucket=-1` is append-only by design). */
+  private def parquetFilesPerBucket(snap: String): Map[String, Int] =
+    fingerprint(snap).keys.toSeq
+      .map(p => new java.io.File(p).getParentFile.getName)
+      .filter(_ != "bucket=-1")
+      .groupBy(identity).map { case (b, fs) => b -> fs.size }
+
   test("config: fail-fast on missing api key (R2)") {
     intercept[IllegalArgumentException] {
       EtlConfig.fromEnv(Map("CITY" -> "x"))
@@ -187,30 +210,30 @@ class EtlPipelineSpec extends SparkSpec {
     val snap = Files.createTempDirectory("inc_upsert").toFile.getAbsolutePath + "/snap"
     val seed = mkBatch((1L to 40L).map(i => (s"name$i", i, s"""{"id": $i}""")),
       "2024-01-01 00:00:00")
-    Pipeline.upsertIncremental(spark, seed, snap, numBuckets = 8)
-    assert(Pipeline.readIncrementalSnapshot(spark, snap).count() === 40L)
-
-    // fingerprint every live parquet file (path -> (size, md5))
-    def files(): Map[String, (Long, String)] = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
-        else Seq(f)
-      walk(new java.io.File(snap)).filter(_.getName.endsWith(".parquet")).map { f =>
-        val bytes = java.nio.file.Files.readAllBytes(f.toPath)
-        val md5 = java.security.MessageDigest.getInstance("MD5").digest(bytes)
-          .map("%02x".format(_)).mkString
-        f.getAbsolutePath -> (f.length(), md5)
-      }.toMap
+    // with AQE coalescing off the merge runs on 4 shuffle partitions, so a
+    // write not clustered on the bucket would leave up to 4 files in each
+    // one; clustered, each touched bucket is written by exactly one task
+    def upsertUncoalesced(batch: org.apache.spark.sql.DataFrame): Unit = {
+      val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
+      spark.conf.set(coalesceKey, "false")
+      try Pipeline.upsertIncremental(spark, batch, snap, numBuckets = 8)
+      finally spark.conf.unset(coalesceKey)
     }
+    upsertUncoalesced(seed)
+    assert(Pipeline.readIncrementalSnapshot(spark, snap).count() === 40L)
+    val seedLayout = parquetFilesPerBucket(snap)
+    assert(seedLayout.size === 8 && seedLayout.values.forall(_ == 1), seedLayout)
+
+    def files() = fingerprint(snap)
     val before = files()
 
     // single-key batch → exactly one bucket rewritten
     val touchedBucket = spark.range(1).select(
       pmod(xxhash64(lit(7L)), lit(8L)).cast("int")).head().getInt(0)
-    Pipeline.upsertIncremental(spark,
-      mkBatch(Seq(("name7-v2", 7L, """{"id": 7, "v": 2}""")), "2025-01-01 00:00:00"),
-      snap, numBuckets = 8)
+    upsertUncoalesced(
+      mkBatch(Seq(("name7-v2", 7L, """{"id": 7, "v": 2}""")), "2025-01-01 00:00:00"))
     val after = files()
+    assert(parquetFilesPerBucket(snap) === seedLayout) // still one file per bucket
     val untouchedBefore = before.filter(!_._1.contains(s"bucket=$touchedBucket"))
     val untouchedAfter = after.filter(!_._1.contains(s"bucket=$touchedBucket"))
     // O(touched keys), not O(snapshot): every file outside the touched
@@ -261,17 +284,7 @@ class EtlPipelineSpec extends SparkSpec {
         lit(java.sql.Timestamp.valueOf("2024-01-02 00:00:00")))
     Pipeline.upsertIncremental(spark, keyless, snap, numBuckets = 8)
 
-    def files(): Map[String, (Long, String)] = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
-        else Seq(f)
-      walk(new java.io.File(snap)).filter(_.getName.endsWith(".parquet")).map { f =>
-        val bytes = java.nio.file.Files.readAllBytes(f.toPath)
-        val md5 = java.security.MessageDigest.getInstance("MD5").digest(bytes)
-          .map("%02x".format(_)).mkString
-        f.getAbsolutePath -> (f.length(), md5)
-      }.toMap
-    }
+    def files() = fingerprint(snap)
     val before = files()
     val ids = Seq(3L, 17L, 42L, 999L).toDF("subject") // 999 absent
     val touchedBuckets = Seq(3L, 17L, 42L, 999L).map { k =>
@@ -325,6 +338,99 @@ class EtlPipelineSpec extends SparkSpec {
       Pipeline.purgeApply(spark, plain, ids)
     }
     assert(e.getMessage.contains("manifest"))
+  }
+
+  test("interrupted bucket swap: upsertIncremental and purgeApply refuse the leftover layout") {
+    import spark.implicits._
+    val snap = Files.createTempDirectory("swap_leftover").toFile.getAbsolutePath + "/snap"
+    val batch = (1L to 20L).map(i => (s"name$i", i, s"""{"id": $i}"""))
+      .toDF("pulse_name", "pulse_id", "raw")
+      .withColumn("ingestion_timestamp", lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")))
+    Pipeline.upsertIncremental(spark, batch, snap, numBuckets = 4)
+    // a crash between the two renames of one bucket's swap: its live
+    // rows moved aside to `.old-<p>-*`, nothing moved into `bucket=<p>`
+    val live = new java.io.File(snap).listFiles().filter(_.getName.startsWith("bucket=")).head
+    val aside = new java.io.File(snap, ".old-" + live.getName.stripPrefix("bucket=") + "-x")
+    assert(live.renameTo(aside))
+    val before = fingerprint(snap, _ => true)
+
+    val e1 = intercept[IllegalArgumentException] {
+      Pipeline.upsertIncremental(spark, batch, snap, numBuckets = 4)
+    }
+    assert(e1.getMessage.contains(aside.getName))
+    val e2 = intercept[IllegalArgumentException] {
+      Pipeline.purgeApply(spark, snap, Seq(1L, 2L).toDF("subject"))
+    }
+    assert(e2.getMessage.contains(aside.getName))
+    assert(fingerprint(snap, _ => true) === before) // not one byte written
+
+    // recovery is one rename; the re-run upsert is then idempotent
+    assert(aside.renameTo(live))
+    Pipeline.upsertIncremental(spark, batch, snap, numBuckets = 4)
+    assert(Pipeline.readIncrementalSnapshot(spark, snap).count() === 20L)
+  }
+
+  test("incremental upsert ≡ full-rewrite upsert over one batch sequence (R17–R19)") {
+    val dir = Files.createTempDirectory("graft-upsert-diff").toFile
+    def pages(name: String, items: Seq[String]*): String = {
+      val d = new java.io.File(dir, name); d.mkdirs()
+      items.zipWithIndex.foreach { case (its, i) =>
+        Files.writeString(new java.io.File(d, s"page-$i.json").toPath,
+          its.mkString("""{"results": [""", ",\n", "]}"))
+      }
+      d.getAbsolutePath
+    }
+    def pulse(id: Long, name: String): String =
+      s"""{"id": 1, "pulse_info": {"name": "$name", "id": $id}}"""
+    // cached once, so both upserts see the same rows (ingestion ts is
+    // current_timestamp()); repartitioned widely so a nondeterministic
+    // same-key tie would actually flip between the two merges
+    def load(dir: String) = {
+      val b = Pipeline.transform(Pipeline.extract(spark, dir, cfg), cfg).repartition(7).cache()
+      b.count(); b
+    }
+    val b1 = load(pages("b1",
+      (100L to 109L).map(k => pulse(k, s"p$k")) ++ Seq(
+        pulse(101L, "k101-later"),   // same key, same page: the later item wins
+        """{"id": 200}""",           // keyed through the pulse_info.id/id coalesce
+        """{"indicator_count": 7}"""), // keyless
+      (110L to 119L).map(k => pulse(k, s"p$k")) ++ Seq(
+        pulse(105L, "k105-page1"),   // same key, later page wins
+        """{"pulse_info": {"name": "stray"}}""")))
+    val b2 = load(pages("b2", Seq(
+      pulse(100L, "k100-b2"),                                // cross-batch update
+      """{"id": 200, "pulse_info": {"name": "k200-b2"}}""", // coalesce-keyed update
+      pulse(300L, "k300-first"), pulse(300L, "k300-second"),
+      """{"indicator_count": 8}""")))
+    val empty = b2.limit(0)
+
+    val full = dir.getAbsolutePath + "/full"
+    val inc = dir.getAbsolutePath + "/inc"
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select(df.columns.sorted.map(col).toIndexedSeq: _*)
+        .collect().map(_.toString).toSeq.sorted
+    Seq(b1, b2).foreach { b =>
+      Pipeline.upsert(spark, b, full)
+      Pipeline.upsertIncremental(spark, b, inc, numBuckets = 8)
+      assert(rows(Pipeline.readIncrementalSnapshot(spark, inc)) ===
+        rows(spark.read.parquet(full)))
+    }
+    val incBefore = fingerprint(inc, _ => true)
+    Pipeline.upsert(spark, empty, full)
+    Pipeline.upsertIncremental(spark, empty, inc, numBuckets = 8)
+    assert(fingerprint(inc, _ => true) === incBefore) // the empty batch writes nothing
+
+    val snap = Pipeline.readIncrementalSnapshot(spark, inc)
+    assert(rows(snap) === rows(spark.read.parquet(full)))
+    assert(snap.count() === 25L) // 22 keys + 3 keyless appends (R19)
+    assert(snap.filter(col("pulse_id").isNull).count() === 3L)
+    val names = snap.filter(col("pulse_id").isNotNull)
+      .select("pulse_id", "pulse_name").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(names(100L) === "k100-b2" && names(105L) === "k105-page1" &&
+      names(200L) === "k200-b2" && names(300L) === "k300-second" && names(101L) === "k101-later" &&
+      names(102L) === "p102")
+    b1.unpersist(); b2.unpersist()
   }
 
   test("full pipeline run returns counts (R20)") {
